@@ -4,7 +4,10 @@ SequenceFile (common/io/SequenceFile.java): Spark ships Hadoop's
 SequenceFile support natively — `write_sequence_file` /
 `read_sequence_file` below are REAL Hadoop-binary-compatible files
 (sc.sequenceFile / rdd.saveAsSequenceFile), not an emulation. A reader of
-the reference's files can hand them to this engine unchanged.
+the reference's files can hand them to this engine unchanged. Like the
+reference's one createWriter keyed by value class, the one writer/reader
+pair picks the Writable boxing from the value column's type: scalars per
+WRITABLE_SPARK_TYPE, map/array/array<array> as (nested) MapWritables.
 
 MapFile (common/io/MapFile.java:66-69: sorted data + sparse index): the
 Spark-native equivalent is `write_kv_sorted` — key-range-partitioned,
@@ -25,8 +28,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType
 
 TEXT_CODECS = {"none", "gzip", "bzip2", "lz4", "deflate", "snappy"}
 PARQUET_CODECS = {"none", "snappy", "gzip", "zstd", "lz4", "uncompressed"}
@@ -50,6 +54,42 @@ WRITABLE_SPARK_TYPE = {
 _SEQ_OUTPUT_FORMAT = "org.apache.hadoop.mapred.SequenceFileOutputFormat"
 
 
+def _writable_boxing(dtype: DataType):
+    """How a value of Spark type `dtype` is boxed as a composite Writable,
+    or None for the scalar types of WRITABLE_SPARK_TYPE:
+
+    - map<k,v> → MapWritable (common/io/MapWritable.java:37): Spark's
+      Writable converter boxes dict entries to typed Writables per
+      MapWritable's class-id table (MapWritable.java:152 readFields);
+    - array<T> → MapWritable of {IntWritable index → element}. Raw
+      ArrayWritable (ArrayWritable.java:46) has NO no-arg constructor, so
+      even Hadoop's own SequenceFile.Reader cannot re-instantiate it
+      reflectively; the index-keyed MapWritable reads back through ANY
+      Hadoop reader;
+    - array<array<T>> → nested index-keyed MapWritables
+      ({row → {col → element}}), the TwoDArrayWritable analog
+      (TwoDArrayWritable.java:30)."""
+    if isinstance(dtype, MapType):
+        return dict
+    if isinstance(dtype, ArrayType):
+        if isinstance(dtype.elementType, ArrayType):
+            return lambda v: {i: dict(enumerate(row)) for i, row in enumerate(v)}
+        return lambda v: dict(enumerate(v))
+    return None
+
+
+def _writable_unboxing(dtype: DataType):
+    """Inverse of _writable_boxing for a read: restore array (and nested
+    array) order from the integer keys. None when the decoded value is
+    already the column's value (scalars, map → dict)."""
+    if isinstance(dtype, ArrayType):
+        if isinstance(dtype.elementType, ArrayType):
+            return lambda m: [[x for _, x in sorted(row.items())]
+                              for _, row in sorted(m.items())]
+        return lambda m: [x for _, x in sorted(m.items())]
+    return None
+
+
 def write_sequence_file(
     df: DataFrame,
     path: str,
@@ -68,12 +108,21 @@ def write_sequence_file(
     :838 createWriter with key/value classes): `compression` picks the
     writer variant (record-compressed / block-compressed), `codec` the
     compression codec, and key/value Writable classes come from the
-    §1.2 type map (Text, Int/Long/Double/Boolean/BytesWritable)."""
+    §1.2 type map (Text, Int/Long/Double/Boolean/BytesWritable). A map,
+    array or array<array> value column is written as MapWritable values
+    whatever `value_class` says (see _writable_boxing)."""
     kt = WRITABLE_SPARK_TYPE[key_class]
-    vt = WRITABLE_SPARK_TYPE[value_class]
-    rdd = df.select(
-        F.col(key_col).cast(kt), F.col(value_col).cast(vt)
-    ).rdd.map(tuple)
+    box = _writable_boxing(df.schema[value_col].dataType)
+    if box is None:
+        vt = WRITABLE_SPARK_TYPE[value_class]
+        rdd = df.select(
+            F.col(key_col).cast(kt), F.col(value_col).cast(vt)
+        ).rdd.map(tuple)
+    else:
+        value_class = "org.apache.hadoop.io.MapWritable"
+        rdd = df.select(
+            F.col(key_col).cast(kt).alias("k"), F.col(value_col).alias("v")
+        ).rdd.map(lambda r: (r.k, box(r.v)))
     if compression == "none":
         rdd.saveAsHadoopFile(path, _SEQ_OUTPUT_FORMAT, key_class, value_class)
         return
@@ -96,135 +145,32 @@ def read_sequence_file(
     """Read a Hadoop SequenceFile into a (key, value) DataFrame. The
     header's key/value classes + codec drive decoding on the Java side
     (SequenceFile.Reader.init) — pass `schema` matching the Writable
-    types (see WRITABLE_SPARK_TYPE)."""
+    types (see WRITABLE_SPARK_TYPE); an array or array<array> value
+    column is rebuilt from its index-keyed MapWritable."""
     rdd = spark.sparkContext.sequenceFile(path)
+    unbox = _writable_unboxing(DataType.fromDDL(schema).fields[1].dataType)
+    if unbox is not None:
+        rdd = rdd.map(lambda kv: (kv[0], unbox(kv[1])))
     return spark.createDataFrame(rdd, schema)
 
 
-def write_sequence_file_map(
-    df: DataFrame,
-    path: str,
-    key_col: str = "key",
-    value_col: str = "value",
-    key_class: str = "org.apache.hadoop.io.Text",
-) -> None:
-    """Composite-Writable write: a map<k,v> column as REAL MapWritable
-    values (common/io/MapWritable.java:37). Round-trips through any Hadoop
-    SequenceFile reader — MapWritable has the no-arg constructor the
-    reader's ReflectionUtils.newInstance needs, and Spark's Writable
-    converter boxes dict entries to typed Writables per MapWritable's
-    class-id table (MapWritable.java:152 readFields)."""
-    kt = WRITABLE_SPARK_TYPE[key_class]
-    rdd = df.select(
-        F.col(key_col).cast(kt).alias("k"), F.col(value_col).alias("v")
-    ).rdd.map(lambda r: (r.k, dict(r.v)))
-    rdd.saveAsHadoopFile(
-        path, _SEQ_OUTPUT_FORMAT, key_class, "org.apache.hadoop.io.MapWritable"
-    )
-
-
-def read_sequence_file_map(
-    spark: SparkSession, path: str, schema: str = "key string, value map<string,bigint>"
-) -> DataFrame:
-    """Read MapWritable-valued SequenceFiles back to a map column."""
-    rdd = spark.sparkContext.sequenceFile(path)
-    return spark.createDataFrame(rdd, schema)
-
-
-def write_sequence_file_array(
-    df: DataFrame,
-    path: str,
-    key_col: str = "key",
-    value_col: str = "value",
-    key_class: str = "org.apache.hadoop.io.Text",
-) -> None:
-    """Composite-Writable write for array<T> columns
-    (common/io/ArrayWritable.java:46).
-
-    ArrayWritable itself has NO no-arg constructor, so even Hadoop's own
-    SequenceFile.Reader cannot re-instantiate it reflectively — every real
-    Hadoop pipeline writes a concrete subclass. From Python we cannot
-    define a Java subclass, so we use the interoperable encoding instead:
-    each array becomes a MapWritable of {IntWritable index → element},
-    readable by ANY Hadoop reader as a standard MapWritable (and by
-    ``read_sequence_file_array`` as the original array)."""
-    kt = WRITABLE_SPARK_TYPE[key_class]
-    rdd = df.select(
-        F.col(key_col).cast(kt).alias("k"), F.col(value_col).alias("v")
-    ).rdd.map(lambda r: (r.k, {i: v for i, v in enumerate(r.v)}))
-    rdd.saveAsHadoopFile(
-        path, _SEQ_OUTPUT_FORMAT, key_class, "org.apache.hadoop.io.MapWritable"
-    )
-
-
-def read_sequence_file_array(
-    spark: SparkSession, path: str, schema: str = "key string, value array<bigint>"
-) -> DataFrame:
-    """Read index-keyed MapWritable SequenceFiles back to an array column,
-    restoring element order from the integer keys."""
-    rdd = spark.sparkContext.sequenceFile(path).map(
-        lambda kv: (kv[0], [v for _, v in sorted(kv[1].items())])
-    )
-    return spark.createDataFrame(rdd, schema)
-
-
-def write_sequence_file_2darray(
-    df: DataFrame,
-    path: str,
-    key_col: str = "key",
-    value_col: str = "value",
-    key_class: str = "org.apache.hadoop.io.Text",
-) -> None:
-    """TwoDArrayWritable analog (common/io/TwoDArrayWritable.java:30) for
-    array<array<T>> columns: nested index-keyed MapWritables
-    ({row → {col → element}}). MapWritable nests cleanly — its per-entry
-    class-id table covers map values, and it has the no-arg constructor
-    ArrayWritable lacks — so the file reads back through any Hadoop
-    SequenceFile reader."""
-    kt = WRITABLE_SPARK_TYPE[key_class]
-    rdd = df.select(
-        F.col(key_col).cast(kt).alias("k"), F.col(value_col).alias("v")
-    ).rdd.map(
-        lambda r: (
-            r.k,
-            {i: {j: x for j, x in enumerate(row)} for i, row in enumerate(r.v)},
-        )
-    )
-    rdd.saveAsHadoopFile(
-        path, _SEQ_OUTPUT_FORMAT, key_class, "org.apache.hadoop.io.MapWritable"
-    )
-
-
-def read_sequence_file_2darray(
-    spark: SparkSession,
-    path: str,
-    schema: str = "key string, value array<array<bigint>>",
-) -> DataFrame:
-    """Read nested index-keyed MapWritables back to array<array<T>>,
-    restoring row/column order from the integer keys."""
-    rdd = spark.sparkContext.sequenceFile(path).map(
-        lambda kv: (
-            kv[0],
-            [
-                [x for _, x in sorted(row.items())]
-                for _, row in sorted(kv[1].items())
-            ],
-        )
-    )
-    return spark.createDataFrame(rdd, schema)
-
-
-def write_kv_sorted(df: DataFrame, path: str, key_col: str = "key",
-                    num_partitions: int | None = None) -> None:
-    """MapFile analog: globally key-sorted parquet. Range partitioning
-    gives cross-file key ordering; sortWithinPartitions gives in-file
-    order; parquet stats give the sparse index."""
+def _key_sorted_writer(df: DataFrame, key_col: str,
+                       num_partitions: int | None) -> DataFrameWriter:
+    """The MapFile layout: range partitioning gives cross-file key
+    ordering, sortWithinPartitions gives in-file order."""
     parted = (
         df.repartitionByRange(num_partitions, F.col(key_col))
         if num_partitions
         else df.repartitionByRange(F.col(key_col))
     )
-    parted.sortWithinPartitions(key_col).write.mode("overwrite").parquet(path)
+    return parted.sortWithinPartitions(key_col).write.mode("overwrite")
+
+
+def write_kv_sorted(df: DataFrame, path: str, key_col: str = "key",
+                    num_partitions: int | None = None) -> None:
+    """MapFile analog: globally key-sorted parquet (_key_sorted_writer);
+    parquet stats give the sparse index."""
+    _key_sorted_writer(df, key_col, num_partitions).parquet(path)
 
 
 def write_kv_bloom(
@@ -244,14 +190,8 @@ def write_kv_bloom(
     parquet reader consults blooms for pushed-down equality predicates.
     functions/bloom.py remains the QUERY-layer bloom (semi-join
     reduction); this is the file-format one."""
-    parted = (
-        df.repartitionByRange(num_partitions, F.col(key_col))
-        if num_partitions
-        else df.repartitionByRange(F.col(key_col))
-    )
     (
-        parted.sortWithinPartitions(key_col)
-        .write.mode("overwrite")
+        _key_sorted_writer(df, key_col, num_partitions)
         .option(f"parquet.bloom.filter.enabled#{key_col}", "true")
         .option(
             f"parquet.bloom.filter.expected.ndv#{key_col}",

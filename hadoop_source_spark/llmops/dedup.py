@@ -357,71 +357,39 @@ def minhash_signatures(
     id_col: str = "doc_id",
     num_hashes: int = 64,
     shingle_n: int = 3,
-    impl: str = "arrow",
     with_sets: bool = False,
 ) -> DataFrame:
-    """MinHash signature per document.
+    """MinHash signature per document, computed by the vectorized numpy
+    mapInPandas kernel `_arrow_minhash` (measured ~10x a JVM explode +
+    per-component `min` aggregate pipeline).
 
-    Shape: explode shingles → num_hashes scalar `min` aggregates grouped
-    by document. Everything stays in whole-stage codegen (per-row
-    higher-order-function folds are interpreted in Spark and measured
-    ~10x slower here), partial aggregation collapses each document's
-    shingles map-side, and the single shuffle carries only
-    #docs × num_hashes longs.
+    Hash family: hash each gram ONCE to 64 bits, then derive component i
+    by remixing that hash with its own odd constant. Genuinely
+    independent across components. (A Kirsch-Mitzenmacher h1 + i*h2
+    family is measurably broken for MinHash: a single shared shingle
+    with a globally small h1 wins EVERY component in both documents,
+    scoring disjoint docs at est≈1.0 — observed, not hypothetical.)
 
-    Hash family: hash the shingle string ONCE to 64 bits, then derive the
-    per-component hash by re-hashing that long with the component index —
-    h_i = xxhash64(xxhash64(s), i). Fixed-width rehash, codegen'd, and
-    genuinely independent across components. (A Kirsch-Mitzenmacher
-    h1 + i*h2 family is measurably broken for MinHash: a single shared
-    shingle with a globally small h1 wins EVERY component in both
-    documents, scoring disjoint docs at est≈1.0 — observed, not
-    hypothetical.)
-
-    impl="arrow" (default) computes signatures in a vectorized numpy
-    mapInPandas kernel — measured ~10x the JVM-interpreted HOF pipeline
-    (higher-order functions don't participate in codegen). impl="sql"
-    keeps the pure-JVM path.
-
-    with_sets=True (arrow only) adds a `shset` column — the distinct gram
-    hashes per doc, for exact-Jaccard verification from the same pass."""
-    if impl == "arrow":
-        schema = f"{id_col} long, signature array<long>"
-        if with_sets:
-            schema += ", shset array<long>"
-        src = df.select(F.col(id_col), F.col(text_col))
-        # The kernel is CPU-bound, so its parallelism IS the input split
-        # count — a small-file scan with fewer splits than the session
-        # has slots leaves cores idle for the dominant stage of the
-        # near-dup pipeline (measured at 10x data: 10 file splits on 32
-        # cores, signatures 72% of the wall). One round-robin exchange
-        # of the slim (id, text) projection buys full-width execution;
-        # when the scan already has >= slots splits (any real corpus)
-        # this is a no-op.
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if src.rdd.getNumPartitions() < target:
-            src = src.repartition(target)
-        return src.mapInPandas(
-            _arrow_minhash(num_hashes, shingle_n, text_col, id_col, with_sets),
-            schema,
-        )
+    with_sets=True adds a `shset` column — the distinct gram hashes per
+    doc, for exact-Jaccard verification from the same pass."""
+    schema = f"{id_col} long, signature array<long>"
     if with_sets:
-        raise ValueError("with_sets requires impl='arrow'")
-    hashed = df.select(
-        F.col(id_col),
-        F.explode(shingle_hashes(F.col(text_col), shingle_n)).alias("__h"),
-    )
-    aggs = [
-        F.min(F.xxhash64("__h", F.lit(i))).alias(f"__s{i}")
-        for i in range(num_hashes)
-    ]
-    return (
-        hashed.groupBy(id_col)
-        .agg(*aggs)
-        .select(
-            id_col,
-            F.array(*[f"__s{i}" for i in range(num_hashes)]).alias("signature"),
-        )
+        schema += ", shset array<long>"
+    src = df.select(F.col(id_col), F.col(text_col))
+    # The kernel is CPU-bound, so its parallelism IS the input split
+    # count — a small-file scan with fewer splits than the session
+    # has slots leaves cores idle for the dominant stage of the
+    # near-dup pipeline (measured at 10x data: 10 file splits on 32
+    # cores, signatures 72% of the wall). One round-robin exchange
+    # of the slim (id, text) projection buys full-width execution;
+    # when the scan already has >= slots splits (any real corpus)
+    # this is a no-op.
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if src.rdd.getNumPartitions() < target:
+        src = src.repartition(target)
+    return src.mapInPandas(
+        _arrow_minhash(num_hashes, shingle_n, text_col, id_col, with_sets),
+        schema,
     )
 
 

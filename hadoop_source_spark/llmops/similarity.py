@@ -1,7 +1,7 @@
 """Similarity search over embedding columns (array<float>).
 
-brute_force_topk — exact cosine top-k: cross join + per-row array math
-(F.zip_with dot product, JVM-side) + per-query bounded top-k window.
+brute_force_topk — exact cosine top-k: per-task numpy matrix product in
+mapInPandas + per-query bounded top-k window.
 Correct at any scale but O(N*Q); the baseline and the verifier for the
 approximate path.
 
@@ -20,6 +20,10 @@ from pyspark.sql import functions as F
 # for probe selection (~0.5 KB/row at dim 64 → ≤ ~4 MB). Larger query
 # sides must use ivf_topk_bipartite, which never collects.
 _IVF_QUERY_CAP = 8192
+
+# Hard bound on the quantizer training sample (rows fetched to the driver
+# for Lloyd's k-means).
+_TRAIN_CAP = 65536
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -52,7 +56,6 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Exact cosine top-k of `corpus` rows for each query row.
 
@@ -61,9 +64,8 @@ def brute_force_topk(
     shuffle until the final per-query top-k (window over query_id —
     bounded state). Ties broken by ascending corpus id for determinism.
 
-    impl="arrow" (default) scores with a numpy matrix product inside
-    mapInPandas (BLAS, float64) — the vectorized path for wide fan-out;
-    impl="sql" keeps the pure-JVM zip_with fold.
+    Scores with a numpy matrix product inside mapInPandas (BLAS,
+    float64) — the vectorized path for wide fan-out.
 
     r14 optimization (guide §2.3 — aggregate before the shuffle, and
     before the Python→JVM boundary): the Arrow kernel keeps a running
@@ -75,63 +77,53 @@ def brute_force_topk(
     boundary transfer and the final sort shrink from corpus-sized to
     candidate-sized.
     """
-    if impl == "arrow":
-        import numpy as np
+    import numpy as np
 
-        qrows = queries.select(query_id_col, vec_col).collect()
-        qids = np.array([r[0] for r in qrows], dtype=np.int64)
-        qm = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-        qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
+    qrows = queries.select(query_id_col, vec_col).collect()
+    qids = np.array([r[0] for r in qrows], dtype=np.int64)
+    qm = np.array([list(r[1]) for r in qrows], dtype=np.float64)
+    qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
 
-        def batches(it):
-            import pandas as pd
+    def batches(it):
+        import pandas as pd
 
-            nq = qids.shape[0]
-            run_i = np.empty((0, nq), dtype=np.int64)
-            run_c = np.empty((0, nq), dtype=np.float64)
-            for pdf in it:
-                m = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-                norms = np.linalg.norm(m, axis=1, keepdims=True)
-                cos = np.round((m / norms) @ qn.T, 6)  # rows x nq
-                ids = pdf[id_col].to_numpy(np.int64)
-                # id-ascending pre-sort + STABLE score argsort = exact
-                # (cosine desc, id asc) batch order, fully vectorized
-                perm = np.argsort(ids, kind="stable")
-                ids_s, cos_s = ids[perm], cos[perm]
-                top = np.argsort(-cos_s, axis=0, kind="stable")[:k]
-                cand_i = np.vstack([run_i, ids_s[top]])
-                cand_c = np.vstack(
-                    [run_c, np.take_along_axis(cos_s, top, axis=0)]
-                )
-                nkeep = min(k, cand_i.shape[0])
-                keep_i = np.empty((nkeep, nq), dtype=np.int64)
-                keep_c = np.empty((nkeep, nq), dtype=np.float64)
-                for j in range(nq):  # nq columns of ≤2k candidates
-                    order = np.lexsort((cand_i[:, j], -cand_c[:, j]))[:k]
-                    keep_i[:, j] = cand_i[order, j]
-                    keep_c[:, j] = cand_c[order, j]
-                run_i, run_c = keep_i, keep_c
-            if run_i.size:
-                yield pd.DataFrame(
-                    {
-                        query_id_col: np.tile(qids, run_i.shape[0]),
-                        id_col: run_i.ravel(),
-                        "cosine": run_c.ravel(),
-                    }
-                )
+        nq = qids.shape[0]
+        run_i = np.empty((0, nq), dtype=np.int64)
+        run_c = np.empty((0, nq), dtype=np.float64)
+        for pdf in it:
+            m = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
+            norms = np.linalg.norm(m, axis=1, keepdims=True)
+            cos = np.round((m / norms) @ qn.T, 6)  # rows x nq
+            ids = pdf[id_col].to_numpy(np.int64)
+            # id-ascending pre-sort + STABLE score argsort = exact
+            # (cosine desc, id asc) batch order, fully vectorized
+            perm = np.argsort(ids, kind="stable")
+            ids_s, cos_s = ids[perm], cos[perm]
+            top = np.argsort(-cos_s, axis=0, kind="stable")[:k]
+            cand_i = np.vstack([run_i, ids_s[top]])
+            cand_c = np.vstack(
+                [run_c, np.take_along_axis(cos_s, top, axis=0)]
+            )
+            nkeep = min(k, cand_i.shape[0])
+            keep_i = np.empty((nkeep, nq), dtype=np.int64)
+            keep_c = np.empty((nkeep, nq), dtype=np.float64)
+            for j in range(nq):  # nq columns of ≤2k candidates
+                order = np.lexsort((cand_i[:, j], -cand_c[:, j]))[:k]
+                keep_i[:, j] = cand_i[order, j]
+                keep_c[:, j] = cand_c[order, j]
+            run_i, run_c = keep_i, keep_c
+        if run_i.size:
+            yield pd.DataFrame(
+                {
+                    query_id_col: np.tile(qids, run_i.shape[0]),
+                    id_col: run_i.ravel(),
+                    "cosine": run_c.ravel(),
+                }
+            )
 
-        scored = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-            batches, f"{query_id_col} long, {id_col} long, cosine double"
-        )
-    else:
-        q = F.broadcast(
-            queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
-        )
-        scored = corpus.crossJoin(q).select(
-            query_id_col,
-            id_col,
-            F.round(cosine(F.col(vec_col), F.col("__qvec")), 6).alias("cosine"),
-        )
+    scored = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(
+        batches, f"{query_id_col} long, {id_col} long, cosine double"
+    )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cosine").desc(), F.col(id_col).asc()
     )
@@ -366,7 +358,7 @@ def _train_and_assign_cells(
         # per-cell sample thins gracefully (FAISS's own warn-but-train
         # regime; a corpus needing tens of thousands of cells would
         # move to hierarchical / distributed quantizer training).
-        train_cap = min(max(num_cells * 256, 4096), 65536)
+        train_cap = min(max(num_cells * 256, 4096), _TRAIN_CAP)
         # Arrow toPandas, NOT collect(): the py4j row path serializes
         # each vector element-by-element and was the dominant cost of
         # quantizer training at 10x data (train set grows with cells).
@@ -441,7 +433,10 @@ def semdedup(
     count() over the corpus) — the SemDeDup/IVF sizing rule that keeps
     per-cell occupancy ~sqrt(N), so the within-cell pairwise check grows
     ~N^1.5 total instead of N²/cells with a pinned cell count (r15,
-    guide §2.5: the fixed-cells shape measured 3.0x at 10x data).
+    guide §2.5: the fixed-cells shape measured 3.0x at 10x data). The
+    rule is capped at _TRAIN_CAP // 16 = 4,096 cells (reached at ~1.7e7
+    rows), so the cell count never exceeds the quantizer's training
+    sample; past the cap, per-cell occupancy grows instead.
     """
     import math
 
@@ -450,7 +445,7 @@ def semdedup(
 
     if num_cells is None:
         n_corpus = corpus.count()
-        num_cells = max(1, min(int(math.isqrt(n_corpus)), n_corpus))
+        num_cells = max(1, min(math.isqrt(n_corpus), n_corpus, _TRAIN_CAP // 16))
 
     _, assigned = _train_and_assign_cells(
         corpus, id_col, vec_col, num_cells, train_fraction,
@@ -967,7 +962,7 @@ def ivfpq_topk(
     # FULL corpus prefix, as the previous assigned-table fetch did.
     # With no train_fraction the trainer rows are a prefix of the
     # codebook rows, so one fetch serves both.
-    train_cap = min(max(num_cells * 256, 4096), 65536)
+    train_cap = min(max(num_cells * 256, 4096), _TRAIN_CAP)
     pq_cap = max(ksub * 256, 4096)
 
     def _raw_fetch(df, cap):

@@ -14,9 +14,10 @@ are emitted as formatted strings (UTC) for the same reason.
 from __future__ import annotations
 
 from collections.abc import Callable
-from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -55,17 +56,14 @@ def register(name: str, oracle: str | None = None, headline: bool = False):
 
 def _overlap(*thunks):
     """Run independent build thunks on a small thread pool (guide §2.6)
-    and return their results in submission order. The first failure
-    propagates as soon as it happens — pending siblings are cancelled
-    (already-running Spark jobs still drain, but the driver does not
-    keep waiting on the slowest build to learn about an error)."""
+    and return their results in submission order. Each thunk runs with
+    the caller's Spark local properties and tags (inheritable_thread_target),
+    so its jobs carry the caller's job group. Every thunk has its own
+    worker and runs to completion; if any fail, the first failure in
+    submission order is raised with its own traceback."""
+    inherit = inheritable_thread_target(SparkSession.active())
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futs = [pool.submit(t) for t in thunks]
-        done, _ = wait(futs, return_when=FIRST_EXCEPTION)
-        for f in done:
-            if f.exception() is not None:
-                pool.shutdown(cancel_futures=True)
-                raise f.exception()
+        futs = [pool.submit(inherit(t)) for t in thunks]
         return [f.result() for f in futs]
 
 
@@ -207,30 +205,6 @@ def q05_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TOPK_ORACLE = """
-SELECT o_orderkey, o_custkey, o_totalprice,
-       strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate
-FROM orders
-ORDER BY o_totalprice DESC, o_orderkey
-LIMIT 15
-"""
-
-
-@register("top_k_orders", _TOPK_ORACLE)
-def top_k_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ls -S + head analog (shell/Ls.java:374): global top-k without a
-    global sort (TakeOrderedAndProject keeps k rows per partition)."""
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_custkey",
-        "o_totalprice",
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
-    )
-    return relational.top_k(
-        o, 15, [F.col("o_totalprice").desc(), F.col("o_orderkey")]
-    )
-
-
 _ROLLUP_ORACLE = """
 WITH base AS (
   SELECT r.r_name, n.n_name, o.o_totalprice
@@ -248,7 +222,6 @@ GROUP BY ROLLUP (r_name, n_name)
 """
 
 
-@register("rollup_revenue", _ROLLUP_ORACLE)
 def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ROLLUP — free from Catalyst (reference has no grouping-sets
     machinery at all; SURVEY §2.4)."""
@@ -288,6 +261,7 @@ FROM orders
 """
 
 
+# Off-window: bench.py and perfbench time this query by name.
 @register("window_running_total", _RUNNING_ORACLE, headline=True)
 def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative per-customer spend — per-key ordered scan, one shuffle."""
@@ -303,113 +277,6 @@ def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
         F.round(F.sum("o_totalprice").over(w), 2).alias("running_total"),
     )
-
-
-_RANK_ORACLE = """
-SELECT * FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-         row_number() OVER (
-           PARTITION BY o_custkey
-           ORDER BY o_totalprice DESC, o_orderkey) AS rn
-  FROM orders) t
-WHERE rn <= 3
-"""
-
-
-@register("window_rank_top3", _RANK_ORACLE)
-def window_rank_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group top-N via row_number — the distributed 'head per dir'."""
-    o = table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        o.select(
-            "o_custkey",
-            "o_orderkey",
-            "o_totalprice",
-            F.row_number().over(w).alias("rn"),
-        )
-        .filter(F.col("rn") <= 3)
-    )
-
-
-_SEMI_ORACLE = """
-SELECT c_custkey, c_name, c_mktsegment
-FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o
-              WHERE o.o_custkey = c.c_custkey
-                AND o.o_orderdate >= TIMESTAMP '2000-01-01')
-"""
-
-
-@register("semi_join_active_customers", _SEMI_ORACLE)
-def semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SetFile/Bloom membership as a left-semi join (SURVEY §2.3); Catalyst
-    may inject a runtime bloom filter on the probe side — exactly
-    BloomMapFile's probablyHasKey short-circuit."""
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
-    )
-    return c.join(
-        o, c.c_custkey == o.o_custkey, "left_semi"
-    ).select("c_custkey", "c_name", "c_mktsegment")
-
-
-_ANTI_ORACLE = """
-SELECT c_custkey, c_name
-FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                    AND o.o_orderdate >= TIMESTAMP '2001-01-01')
-"""
-
-
-@register("anti_join_dormant_customers", _ANTI_ORACLE)
-def anti_join_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti join: customers with no recent orders."""
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= F.lit("2001-01-01").cast("timestamp")
-    )
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        "c_custkey", "c_name"
-    )
-
-
-_SETOPS_ORACLE = """
-SELECT 'except' AS op, c_custkey FROM (
-  SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-  EXCEPT
-  SELECT c_custkey FROM customer WHERE c_acctbal < 0)
-UNION ALL
-SELECT 'intersect' AS op, c_custkey FROM (
-  SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-  INTERSECT
-  SELECT c_custkey FROM customer WHERE c_acctbal > 5000)
-"""
-
-
-@register("setops_building", _SETOPS_ORACLE)
-def setops_building(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT DISTINCT + INTERSECT DISTINCT in one tagged result — the
-    SetFile difference and bloom `and` exact counterparts (SURVEY §2.6).
-    Both branches read the same dim scan; each lowers to its native
-    Catalyst set operator (left-anti / left-semi aggregate forms)."""
-    c = table(spark, sf_dir, "customer")
-    building = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    diff = (
-        building.subtract(c.filter(F.col("c_acctbal") < 0).select("c_custkey"))
-        .select(F.lit("except").alias("op"), "c_custkey")
-    )
-    inter = (
-        building.intersect(
-            c.filter(F.col("c_acctbal") > 5000).select("c_custkey")
-        )
-        .select(F.lit("intersect").alias("op"), "c_custkey")
-    )
-    return diff.unionByName(inter)
 
 
 _SNAPDIFF_ORACLE = """
@@ -897,19 +764,6 @@ GROUP BY event_type
 """
 
 
-@register("percentiles_by_type", _PCT_ORACLE)
-def percentiles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantiles (SampleQuantiles.java:50 analog). Exact `percentile` here
-    for oracle equality; the 100 TB path is approx_percentile (mergeable
-    GK sketch — same family as the reference's)."""
-    e = table(spark, sf_dir, "events")
-    return e.groupBy("event_type").agg(
-        F.round(F.percentile("value", F.lit(0.5)), 6).alias("p50"),
-        F.round(F.percentile("value", F.lit(0.9)), 6).alias("p90"),
-        F.round(F.percentile("value", F.lit(0.99)), 6).alias("p99"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Namespace/catalog surface over `documents` (source = path analog)
 # ---------------------------------------------------------------------------
@@ -1147,34 +1001,6 @@ def webhdfs_liststatus_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return webhdfs.parse_liststatus(responses)
 
 
-_FIND_ORACLE = """
-SELECT doc_id, source, n_chars
-FROM documents
-WHERE regexp_matches(source, '(?i)^SRC1[^/]*$')
-  AND NOT regexp_matches(source, '^src19')
-  AND len(string_split(concat(source, '/', doc_id), '/')) <= 2
-  AND n_chars > 500
-"""
-
-
-@register("find_glob_docs", _FIND_ORACLE)
-def find_glob_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """find -iname 'SRC1*' -size +500 -maxdepth 2, with 'src19*' pruned
-    (Find.java:43/102 expression tree; Result.java STOP semantics;
-    GlobPattern.java:32 translation; find/Name.java:29 -iname)."""
-    d = table(spark, sf_dir, "documents").withColumn(
-        "__path", F.concat_ws("/", "source", "doc_id")
-    )
-    return catalog.find(
-        d,
-        catalog.glob_filter("source", "SRC1*", case_insensitive=True),
-        F.col("n_chars") > 500,
-        prune=catalog.glob_filter("source", "src19*"),
-        max_depth=2,
-        depth_col="__path",
-    ).select("doc_id", "source", "n_chars")
-
-
 # ---------------------------------------------------------------------------
 # LLM-pipeline operators over documents / embeddings
 # ---------------------------------------------------------------------------
@@ -1308,19 +1134,6 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("jaccard"), 4).alias("mean_jaccard"),
         )
     )
-
-
-@register("dedup_ngram_jaccard", _NGRAM_JACCARD_ORACLE)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-gram Jaccard near-dup pairs at >= 0.5.
-
-    NOT a headline/bench query: exact all-pairs Jaccard via shingle
-    self-join is quadratic in per-shingle document frequency — on this
-    small-vocabulary corpus at sf0.1 it explodes. It exists as the exact
-    ground truth the scalable path (dedup_minhash_lsh) is validated
-    against at sf0.01."""
-    d = table(spark, sf_dir, "documents")
-    return dd.ngram_jaccard_pairs(d, "text", "doc_id", shingle_n=3, threshold=0.5)
 
 
 _SHARD_MANIFEST_ORACLE = """
@@ -1622,6 +1435,7 @@ def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.duplicate_span_rewrite(d, "text", "doc_id", k=8)
 
 
+# Off-window: bench.py and perfbench time this query by name.
 @register("dedup_minhash_lsh", _NGRAM_JACCARD_ORACLE, headline=True)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidates + exact Jaccard verification — the
@@ -1633,13 +1447,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.minhash_lsh_verified_pairs(
         d, "text", "doc_id", num_hashes=64, bands=16, threshold=0.5
     )
-
-
-@register("dedup_simhash", None)
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (approximate — validated in tests)."""
-    d = table(spark, sf_dir, "documents")
-    return dd.simhash_dup_pairs(d, "text", "doc_id", max_hamming=3)
 
 
 _DOC_STATS_ORACLE = r"""
@@ -1805,6 +1612,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.embedding_dup_pairs_blocked(e, threshold=0.4)
 
 
+# Off-window: bench.py and perfbench time this query by name.
 @register("ann_cosine_ivf", None, headline=True)
 def ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: KMeans coarse quantizer + nprobe cell search + exact
@@ -1814,16 +1622,6 @@ def ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return sim.ivf_topk(e, q, k=10, num_cells=8, nprobe=3, train_fraction=0.25)
-
-
-@register("ann_cosine_lsh", None)
-def ann_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH approximate top-k (recall tested vs brute force)."""
-    e = table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return sim.lsh_topk(e, q, k=10, id_col="vec_id", vec_col="embedding")
 
 
 _PQ_GATE_ORACLE = """
@@ -1883,37 +1681,6 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exact_top1",
         (F.coalesce("__hits", F.lit(0)) >= 9).alias("recall10_ok"),
     )
-
-
-_GET_CLOSEST_ORACLE = """
-WITH kv AS (SELECT p_partkey AS key, p_name AS value FROM part),
-probes AS (
-  SELECT DISTINCT o_orderkey % 2500 AS key
-  FROM orders WHERE o_orderkey % 37 = 0
-),
-m AS (
-  SELECT p.key, min(kv.key) AS key_right
-  FROM probes p LEFT JOIN kv ON kv.key >= p.key
-  GROUP BY p.key
-)
-SELECT m.key, m.key_right, kv.value
-FROM m LEFT JOIN kv ON kv.key = m.key_right
-"""
-
-
-@register("kv_get_closest", _GET_CLOSEST_ORACLE)
-def kv_get_closest_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MapFile.Reader.getClosest (MapFile.java:699): first key >= probe,
-    null past the end — via the asof-join kernel, not a range join."""
-    p = table(spark, sf_dir, "part")
-    o = table(spark, sf_dir, "orders")
-    kv_df = p.select(F.col("p_partkey").alias("key"), F.col("p_name").alias("value"))
-    probes = (
-        o.filter(F.col("o_orderkey") % 37 == 0)
-        .select((F.col("o_orderkey") % 2500).alias("key"))
-        .distinct()
-    )
-    return kv.kv_get_closest(kv_df, probes, key="key", before=False)
 
 
 # ---------------------------------------------------------------------------
@@ -2148,7 +1915,6 @@ GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """
 
 
-@register("cube_status_priority", _CUBE_ORACLE)
 def cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY CUBE (reference has no grouping-sets machinery; SURVEY §2.4)."""
     o = table(spark, sf_dir, "orders")
@@ -2165,52 +1931,6 @@ def cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_price",
         )
     )
-
-
-_VIEWFS_ORACLE = """
-SELECT 'mnt_a' AS mount, doc_id, source FROM documents WHERE source = 'src1'
-UNION ALL
-SELECT 'mnt_b' AS mount, doc_id, source FROM documents
-WHERE source IN ('src2', 'src3')
-"""
-
-
-@register("viewfs_union", _VIEWFS_ORACLE)
-def viewfs_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ViewFs mount-table union (ViewFileSystem.java:89): N namespaces
-    exposed as one via UNION ALL."""
-    d = table(spark, sf_dir, "documents")
-    mnt_a = d.filter(F.col("source") == "src1").select(
-        F.lit("mnt_a").alias("mount"), "doc_id", "source"
-    )
-    mnt_b = d.filter(F.col("source").isin("src2", "src3")).select(
-        F.lit("mnt_b").alias("mount"), "doc_id", "source"
-    )
-    return setops.union_all([mnt_a, mnt_b])
-
-
-_KV_LOOKUP_ORACLE = """
-WITH kv AS (SELECT p_partkey AS key, p_name AS value FROM part),
-probes AS (
-  SELECT DISTINCT o_orderkey % 2000 AS key
-  FROM orders WHERE o_orderkey % 53 = 0
-)
-SELECT p.key, kv.value FROM probes p LEFT JOIN kv ON kv.key = p.key
-"""
-
-
-@register("kv_point_lookup", _KV_LOOKUP_ORACLE)
-def kv_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MapFile.Reader.get (MapFile.java:681): batch point lookups."""
-    p = table(spark, sf_dir, "part")
-    o = table(spark, sf_dir, "orders")
-    kv_df = p.select(F.col("p_partkey").alias("key"), F.col("p_name").alias("value"))
-    probes = (
-        o.filter(F.col("o_orderkey") % 53 == 0)
-        .select((F.col("o_orderkey") % 2000).alias("key"))
-        .distinct()
-    )
-    return kv.kv_lookup(kv_df, probes, key="key")
 
 
 _MERGE_SORTED_ORACLE = """
@@ -2277,13 +1997,6 @@ def _string_hash_cols() -> list[Column]:
     ]
 
 
-@register("string_hash_docs", _STRING_HASH_ORACLE)
-def string_hash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone string/digest projection (see _string_hash_cols)."""
-    d = table(spark, sf_dir, "documents")
-    return d.select("doc_id", *_string_hash_cols())
-
-
 _MULTIMODAL_ORACLE = """
 SELECT doc_id,
        strlen(text) AS n_bytes,
@@ -2292,80 +2005,6 @@ SELECT doc_id,
        strlen(text) % 1080 AS fake_height
 FROM documents
 """
-
-
-@register("multimodal_meta", _MULTIMODAL_ORACLE)
-def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-payload metadata extraction through the real multimodal
-    plumbing (mapInPandas over Arrow batches; payload = UTF-8 bytes as the
-    image stand-in, decode step stubbed — llmops/multimodal.py)."""
-    from hadoop_source_spark.llmops import multimodal as mm
-
-    d = table(spark, sf_dir, "documents")
-    return mm.extract_meta(mm.with_payload(d, "text", "doc_id"))
-
-
-_LS_STAT_ORACLE = """
-SELECT path, n_chars, rn,
-       concat('name=', path, ' size=', n_chars, ' lang=', lang) AS stat
-FROM (
-  SELECT concat(source, '/', doc_id) AS path, n_chars, lang,
-         row_number() OVER (ORDER BY n_chars DESC, doc_id) AS rn
-  FROM documents) t
-WHERE rn <= 50
-"""
-
-
-@register("ls_stat_docs", _LS_STAT_ORACLE)
-def ls_stat_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ls -S + stat %-format in one listing (shell/Ls.java:374 size
-    comparator; shell/Stat.java:32-42 projection): top-50 by size via
-    TakeOrderedAndProject (per-partition heaps — no global sort), rank and
-    stat string computed over the 50 survivors only. Bounded output, as
-    the shell's paginated listing (dfs.ls.limit)."""
-    d = table(spark, sf_dir, "documents")
-    top = (
-        d.select(
-            F.concat_ws("/", "source", "doc_id").alias("path"),
-            "n_chars",
-            "lang",
-            "doc_id",
-        )
-        .orderBy(F.col("n_chars").desc(), F.col("doc_id"))
-        .limit(50)
-    )
-    w = Window.orderBy(F.col("n_chars").desc(), F.col("doc_id"))
-    ranked = top.select(
-        "path", "n_chars", "lang", F.row_number().over(w).alias("rn")
-    )
-    return ranked.select(
-        "path",
-        "n_chars",
-        "rn",
-        F.concat(
-            F.lit("name="),
-            "path",
-            F.lit(" size="),
-            F.col("n_chars").cast("string"),
-            F.lit(" lang="),
-            "lang",
-        ).alias("stat"),
-    )
-
-
-@register("bloom_membership", None)
-def bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BloomMapFile gate (BloomMapFile.java:264): build a bloom filter over
-    customers-with-orders, probe all customers. Approximate (fp possible,
-    no false negatives) — contract validated in tests, rows-only here."""
-    from hadoop_source_spark.functions import bloom
-
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders")
-    filt = bloom.bloom_build(o.select(F.col("o_custkey").alias("key")), "key")
-    return bloom.bloom_probe(
-        filt, c.select(F.col("c_custkey").alias("key")), "key"
-    ).filter(F.col("might_contain"))
 
 
 _Q06_ORACLE = """
@@ -2941,27 +2580,6 @@ def timeline_entity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HEAD_TAIL_ORACLE = """
-SELECT 'head' AS part, l_orderkey, l_linenumber,
-       strftime(l_shipdate, '%Y-%m-%d') AS l_shipdate, rn
-FROM (
-  SELECT l_orderkey, l_linenumber, l_shipdate,
-         row_number() OVER (ORDER BY l_shipdate, l_orderkey, l_linenumber)
-           AS rn
-  FROM lineitem) t
-WHERE rn <= 20
-UNION ALL
-SELECT 'tail' AS part, l_orderkey, l_linenumber,
-       strftime(l_shipdate, '%Y-%m-%d') AS l_shipdate, rn
-FROM (
-  SELECT l_orderkey, l_linenumber, l_shipdate,
-         row_number() OVER (ORDER BY l_shipdate DESC, l_orderkey DESC,
-                            l_linenumber DESC) AS rn
-  FROM lineitem) t
-WHERE rn <= 20
-"""
-
-
 def _bounded_rank(l: DataFrame, cols: list[Column], part: str) -> DataFrame:
     """TakeOrderedAndProject top-20, then rank the 20 survivors (the
     window runs over 20 rows, not the table — no single-partition sort
@@ -2975,20 +2593,6 @@ def _bounded_rank(l: DataFrame, cols: list[Column], part: str) -> DataFrame:
         F.date_format("l_shipdate", "yyyy-MM-dd").alias("l_shipdate"),
         F.row_number().over(w).alias("rn"),
     )
-
-
-@register("head_tail_lineitem", _HEAD_TAIL_ORACLE)
-def head_tail_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """head -n 20 + tail -n 20 in key order (shell/Head.java,
-    shell/Tail.java): both sides lower to TakeOrderedAndProject
-    (per-partition bounded heaps), tail as reversed head."""
-    l = table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_shipdate"
-    )
-    keys = ["l_shipdate", "l_orderkey", "l_linenumber"]
-    head = _bounded_rank(l, [F.col(c).asc() for c in keys], "head")
-    tail = _bounded_rank(l, [F.col(c).desc() for c in keys], "tail")
-    return head.unionByName(tail)
 
 
 _CC_ORACLE = f"""
@@ -3109,85 +2713,6 @@ def q21_suppliers_who_wait(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GAPS_ORACLE = f"""
-SELECT user_id, event_id,
-       datediff('microsecond',
-                lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-                ts) AS gap_us_prev
-FROM events
-"""
-
-
-@register("events_gaps", _GAPS_ORACLE)
-def events_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag/lead surface: microsecond gap to each user's previous event
-    (NULL for the first — the inter-arrival metric MutableRate feeds on)."""
-    e = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return e.select(
-        "user_id",
-        "event_id",
-        (F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))).alias(
-            "gap_us_prev"
-        ),
-    )
-
-
-_TYPES_ORACLE = """
-SELECT user_id,
-       array_to_string(list_sort(list(DISTINCT event_type)), ',') AS types,
-       count(*) AS n
-FROM events
-GROUP BY user_id
-"""
-
-
-@register("user_event_types", _TYPES_ORACLE)
-def user_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array aggregation (ArrayWritable/EnumSetWritable analog §1.2):
-    sorted distinct event-type set per user."""
-    e = table(spark, sf_dir, "events")
-    return e.groupBy("user_id").agg(
-        F.concat_ws(",", F.sort_array(F.collect_set("event_type"))).alias(
-            "types"
-        ),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-_NTILE_ORACLE = """
-SELECT quartile, count(*) AS n,
-       round(min(o_totalprice), 2) AS min_price,
-       round(max(o_totalprice), 2) AS max_price
-FROM (
-  SELECT o_totalprice,
-         ntile(4) OVER (ORDER BY o_totalprice, o_orderkey) AS quartile
-  FROM orders) t
-GROUP BY quartile
-"""
-
-
-@register("orders_price_quartiles", _NTILE_ORACLE)
-def orders_price_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ntile bucketing (midKey/quantile partition hints, MapFile.java:527).
-    Uses relational.global_ntile (range exchange + broadcast offsets) —
-    same result as F.ntile(4).over(Window.orderBy(...)) without the
-    single-partition sort of the fact table."""
-    o = table(spark, sf_dir, "orders")
-    return (
-        relational.global_ntile(
-            o, ["o_totalprice", "o_orderkey"], 4, bucket_col="quartile"
-        )
-        .select("o_totalprice", "quartile")
-        .groupBy("quartile")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.min("o_totalprice"), 2).alias("min_price"),
-            F.round(F.max("o_totalprice"), 2).alias("max_price"),
-        )
-    )
-
-
 _HIST_ORACLE = """
 SELECT CAST(floor(value / 50) AS BIGINT) AS bin,
        count(*) AS n,
@@ -3195,21 +2720,6 @@ SELECT CAST(floor(value / 50) AS BIGINT) AS bin,
 FROM events
 GROUP BY 1
 """
-
-
-@register("events_value_histogram", _HIST_ORACLE)
-def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width histogram (the metrics2 sample-distribution view)."""
-    e = table(spark, sf_dir, "events")
-    return (
-        e.groupBy(
-            F.floor(F.col("value") / 50).cast("long").alias("bin")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg("value"), 6).alias("avg_in_bin"),
-        )
-    )
 
 
 def _pii_redact_sql(col: str) -> str:
@@ -3272,22 +2782,6 @@ def corpus_prep_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     return profile.join(keep, "doc_id").filter(F.col("quality") >= 0.45)
 
 
-_UNION_DISTINCT_ORACLE = """
-SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-UNION
-SELECT c_custkey FROM customer WHERE c_mktsegment = 'MACHINERY'
-"""
-
-
-@register("union_distinct_segments", _UNION_DISTINCT_ORACLE)
-def union_distinct_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION DISTINCT (vs viewfs_union's UNION ALL)."""
-    c = table(spark, sf_dir, "customer")
-    a = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    b = c.filter(F.col("c_mktsegment") == "MACHINERY").select("c_custkey")
-    return a.union(b).distinct()
-
-
 # ---------------------------------------------------------------------------
 # public accessors
 # ---------------------------------------------------------------------------
@@ -3310,8 +2804,7 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o
 @register("semi_anti_customers", _SEMI_ANTI_ORACLE)
 def semi_anti_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom semi-join reduction AND set-membership anti join in one
-    verified result (window consolidation of semi_join_active_customers +
-    anti_join_dormant_customers — both stay registered individually)."""
+    verified result."""
     c = table(spark, sf_dir, "customer")
     recent = table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
@@ -3350,8 +2843,7 @@ def find_ls_stat_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """find | ls -S | stat composed: expression-tree find (-iname glob,
     prune, -maxdepth, -size) feeding a bounded size-ordered stat listing
     (TakeOrderedAndProject over the matches; rank + stat string computed
-    on the 50 survivors only). Window consolidation of find_glob_docs +
-    ls_stat_docs — both stay registered individually."""
+    on the 50 survivors only)."""
     d = table(spark, sf_dir, "documents").withColumn(
         "__path", F.concat_ws("/", "source", "doc_id")
     )
@@ -3438,7 +2930,6 @@ FROM b WHERE kb < 2500
 """
 
 
-@register("split_sample_docs", _SPLIT_SAMPLE_ORACLE)
 def split_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/val/test assignment + deterministic 25%
     subsample, composed (llmops/sampling.py): pure per-row hash
@@ -3463,7 +2954,6 @@ WHERE ((doc_id % 1000003 + 42) * 2654435761) % 10000 <
 """
 
 
-@register("stratified_sample_docs", _STRATIFIED_ORACLE)
 def stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Class-balancing training mix: per-language deterministic sampling
     (downsample dominant 'en' to 20%, keep low-resource 'zh' whole) via
@@ -3660,27 +3150,14 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang", F.col("copy").cast("long").alias("copy"))
 
 
-@register("approx_distinct_users", None)
-def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL++ distinct-user sketch per event type (the §2.4 sketch family
-    next to the quantile sketch): approx_count_distinct at rsd=0.01 —
-    one map-side-mergeable sketch per group, constant memory per group at
-    any scale where exact COUNT(DISTINCT) needs a second shuffle. Bounded
-    relative error gated in pytest (approximate: no SQL oracle)."""
-    e = table(spark, sf_dir, "events")
-    return e.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd=0.01).alias("approx_users"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Suite queries: same-family operators consolidated into one driver row
 # each, so EVERY operator family fits inside the driver's 50-query
 # verification window (round-1 evidence: CORRECTNESS_r01 held exactly the
-# first 50 names of queries()). The standalone component queries above
-# stay registered — pytest's oracle-parity gate runs the FULL registry —
-# but queries()/oracle_sql() expose only the curated window below.
+# first 50 names of queries()). Each operator is registered once: a
+# component that a suite runs is a plain function (rollup_revenue,
+# cube_status_priority, split_sample_docs, stratified_sample_docs), not a
+# second registration, so the oracle-parity gate checks it once.
 # ---------------------------------------------------------------------------
 
 _LIMIT_FAMILY_ORACLE = """
@@ -3716,7 +3193,7 @@ WHERE rn <= 15
 @register("limit_family", _LIMIT_FAMILY_ORACLE)
 def limit_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     """head / tail / global top-k in one tagged result (SURVEY §2.5 limit
-    family = top_k_orders + head_tail_lineitem). Every branch is bounded:
+    family: ls -S + head, Head.java, Tail.java). Every branch is bounded:
     TakeOrderedAndProject keeps k rows per partition, and the rank window
     runs over the k survivors only — no single-partition sort of a fact
     table at any scale."""
@@ -4326,8 +3803,10 @@ QUERIES["doc_profile"].oracle = _doc_profile_suite_oracle()
 # evidence: CORRECTNESS_r01 held exactly the first 50 registered names).
 # queries()/oracle_sql() therefore expose EXACTLY the 50-name window below
 # — every TPC-H shape plus one (possibly consolidated) oracle-backed query
-# per SURVEY §2 / llmops operator family. The full registry stays intact
-# for pytest, bench headline selection, and direct API use.
+# per SURVEY §2 / llmops operator family. Outside the window the registry
+# holds only window_running_total, dedup_minhash_lsh and ann_cosine_ivf,
+# which bench.py and perfbench time by name (tests/test_registry.py pins
+# that set).
 _REPETITION_ORACLE = """
 WITH toks AS (
   SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
@@ -21553,9 +21032,9 @@ assert len(_WINDOW) == 259, len(_WINDOW)
 # non-SQL ops (approximate sketch/ANN recall, iterative GD training,
 # clustered greedy pruning, eigensolves, subword segmentation), each
 # validated in tests/ against ground truth or an in-plan recall gate
-# instead (see __spark_entry__'s docstring). scripts/sweep.py asserts
-# window/registry consistency against this list so an oracle can never
-# be dropped silently.
+# instead (see __spark_entry__'s docstring). tests/test_registry.py
+# asserts window/registry consistency against this list so an oracle can
+# never be dropped silently.
 ROWS_ONLY_BY_DESIGN = frozenset({
     "mmr_diversify_hybrid",
     "sketch_suite", "ann_cosine_approx", "semdedup_prune",

@@ -22,38 +22,7 @@ from hadoop_source_spark import get_spark, workload  # noqa: E402
 BUDGET_SEC = float(os.environ.get("SPARK_GRAFT_SWEEP_BUDGET", "10"))
 
 
-def check_window_contract() -> None:
-    """Pin the contract the driver relies on: every _WINDOW query is
-    registered with an oracle OR is on the documented rows-only list,
-    and __spark_entry__ exposes exactly the _WINDOW surface in order.
-    A dropped oracle or a dangling/unregistered window row fails the
-    sweep loudly instead of silently weakening the driver check."""
-    import __spark_entry__ as entry
-
-    missing_oracle = [
-        n for n in workload._WINDOW
-        if workload.QUERIES[n].oracle is None
-        and n not in workload.ROWS_ONLY_BY_DESIGN
-    ]
-    assert not missing_oracle, (
-        f"window queries lack an oracle and are not documented rows-only: "
-        f"{missing_oracle}"
-    )
-    stale_tags = sorted(
-        workload.ROWS_ONLY_BY_DESIGN
-        - {n for n in workload._WINDOW if workload.QUERIES[n].oracle is None}
-    )
-    assert not stale_tags, f"rows-only tags no longer apply: {stale_tags}"
-    assert list(entry.queries()) == workload._WINDOW, (
-        "__spark_entry__.queries() diverged from workload._WINDOW"
-    )
-    assert set(entry.oracle_sql()) == set(workload._WINDOW) - set(
-        workload.ROWS_ONLY_BY_DESIGN
-    ), "__spark_entry__.oracle_sql() diverged from the oracle-backed window"
-
-
 def main() -> None:
-    check_window_contract()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="hss-sweep")
     spark.sparkContext.setLogLevel("ERROR")

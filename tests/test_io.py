@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import glob
 import tempfile
 
 import pytest
@@ -337,38 +338,31 @@ def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
         hio.compact_parquet(spark, src, dst, target_bytes=0)
 
 
-def test_sequence_file_map_round_trip(spark):
-    """Composite Writable: map<string,long> column as REAL MapWritable
-    values (MapWritable.java:37) — write → read-back equality."""
-    df = spark.createDataFrame(
-        [("k1", {"a": 1, "b": 2}), ("k2", {"c": 3}), ("k3", {})],
-        "key string, value map<string,bigint>",
-    )
-    with tempfile.TemporaryDirectory() as d:
-        path = f"{d}/seqmap"
-        hio.write_sequence_file_map(df, path)
-        back = hio.read_sequence_file_map(spark, path)
-        assert sorted((r.key, dict(r.value)) for r in back.collect()) == sorted(
-            (r.key, dict(r.value)) for r in df.collect()
-        )
-
-
-def test_sequence_file_array_round_trip(spark):
-    """Composite Writable: array<long> column via the index-keyed
-    MapWritable encoding (ArrayWritable.java:46 has no no-arg ctor, so
-    raw ArrayWritable is unreadable even to Hadoop itself) — order must
-    survive the round trip."""
-    df = spark.createDataFrame(
-        [("k1", [3, 1, 2]), ("k2", [10]), ("k3", [])],
-        "key string, value array<bigint>",
-    )
-    with tempfile.TemporaryDirectory() as d:
-        path = f"{d}/seqarr"
-        hio.write_sequence_file_array(df, path)
-        back = hio.read_sequence_file_array(spark, path)
-        assert sorted((r.key, list(r.value)) for r in back.collect()) == sorted(
-            (r.key, list(r.value)) for r in df.collect()
-        )
+@pytest.mark.parametrize("schema,rows", [
+    # map<string,long> as REAL MapWritable values (MapWritable.java:37)
+    ("key string, value map<string,bigint>",
+     [("k1", {"a": 1, "b": 2}), ("k2", {"c": 3}), ("k3", {})]),
+    # array<long> via the index-keyed MapWritable encoding
+    # (ArrayWritable.java:46 has no no-arg ctor, so raw ArrayWritable is
+    # unreadable even to Hadoop itself) — order must survive
+    ("key string, value array<bigint>",
+     [("k1", [3, 1, 2]), ("k2", [10]), ("k3", [])]),
+    # TwoDArrayWritable analog (TwoDArrayWritable.java:30): nested
+    # index-keyed MapWritables preserve row/column order exactly
+    ("key string, value array<array<bigint>>",
+     [("k1", [[1, 2, 3], [4]]), ("k2", [[], [7, 8]]), ("k3", [])]),
+], ids=["map", "array", "2darray"])
+def test_sequence_file_composite_round_trip(spark, tmp_path, schema, rows):
+    """Composite Writables through the one writer and reader: the value
+    column's Spark type picks the boxing on write, `schema` on read."""
+    df = spark.createDataFrame(rows, schema)
+    path = str(tmp_path / "seq")
+    hio.write_sequence_file(df, path)
+    back = hio.read_sequence_file(spark, path, schema)
+    assert back.schema == df.schema
+    assert sorted(map(tuple, back.collect())) == sorted(rows)
+    with open(glob.glob(f"{path}/part-*")[0], "rb") as f:
+        assert b"org.apache.hadoop.io.MapWritable" in f.read(256)
 
 
 AVRO_SCHEMA = {
@@ -414,22 +408,6 @@ def test_cat_sniffs_avro_magic(spark, tmp_path):
     parsed = sorted((_json.loads(v)["id"], _json.loads(v)["name"]) for v in rows)
     assert parsed == [(1, "a"), (2, "b")]
     assert len(rows) == 2
-
-
-def test_sequence_file_2darray_round_trip(spark):
-    """TwoDArrayWritable analog (TwoDArrayWritable.java:30): nested
-    index-keyed MapWritables preserve row/column order exactly."""
-    df = spark.createDataFrame(
-        [("k1", [[1, 2, 3], [4]]), ("k2", [[], [7, 8]]), ("k3", [])],
-        "key string, value array<array<bigint>>",
-    )
-    with tempfile.TemporaryDirectory() as d:
-        path = f"{d}/seq2d"
-        hio.write_sequence_file_2darray(df, path)
-        back = hio.read_sequence_file_2darray(spark, path)
-        assert sorted(
-            (r.key, [list(x) for x in r.value]) for r in back.collect()
-        ) == sorted((r.key, [list(x) for x in r.value]) for r in df.collect())
 
 
 def test_zorder_layout_prunes_2d_box_queries(spark, tmp_path):

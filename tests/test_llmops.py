@@ -126,6 +126,28 @@ def test_semdedup_auto_cells_scales_with_corpus(spark):
     assert dropped == {1000 + i for i in range(8)}
 
 
+def test_semdedup_auto_cells_capped_by_trainer_sample(spark, monkeypatch):
+    """At 5e9 rows, isqrt(N) = 70,710 cells would exceed the quantizer's
+    65,536-row training cap (the trainer then raises ValueError); the
+    auto rule stops at _TRAIN_CAP // 16 = 4,096 cells."""
+
+    class Stop(Exception):
+        pass
+
+    seen = {}
+
+    def trainer(corpus, id_col, vec_col, num_cells, *args, **kwargs):
+        seen["cells"] = num_cells
+        raise Stop
+
+    df = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    monkeypatch.setattr(df, "count", lambda: 5_000_000_000)
+    monkeypatch.setattr(sim, "_train_and_assign_cells", trainer)
+    with pytest.raises(Stop):
+        sim.semdedup(df, num_cells=None)
+    assert seen["cells"] == sim._TRAIN_CAP // 16 == 4096
+
+
 def test_skew_caps_identity_above_and_prune_below(spark, docs):
     """df_cap (hot-shingle stop list) and bucket_cap (hot simhash bucket
     drop) must be identity when the cap exceeds every frequency, and only

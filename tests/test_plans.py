@@ -37,8 +37,10 @@ def test_q06_all_predicates_pushed(spark):
 
 
 def test_top_k_is_bounded(spark):
-    df = workload.QUERIES["top_k_orders"].fn(spark, SF)
-    assert plans.has_take_ordered(df)
+    """limit_family's global top-k branch (ls -S + head) lowers to
+    TakeOrderedAndProject — no global sort."""
+    df = workload.QUERIES["limit_family"].fn(spark, SF)
+    assert "TakeOrderedAndProject(limit=15" in plans.executed_plan(df)
 
 
 def test_asof_join_single_shuffle(spark):
@@ -109,23 +111,27 @@ def test_sql_surface_matches_dataframe(spark):
 def test_head_tail_uses_bounded_topk_both_sides(spark):
     """head and tail must BOTH lower to TakeOrderedAndProject (bounded
     per-partition heaps) — no full-table single-partition window sort."""
-    df = workload.QUERIES["head_tail_lineitem"].fn(spark, SF)
+    df = workload.QUERIES["limit_family"].fn(spark, SF)
     plan = plans.executed_plan(df)
     assert plan.count("TakeOrderedAndProject(limit=20") == 2
-    assert plans.shuffle_count(df) == 0  # windows run on the 20 survivors
+    assert plans.shuffle_count(df) == 0  # windows run on the k survivors
 
 
 def test_ls_stat_uses_bounded_topk(spark):
-    df = workload.QUERIES["ls_stat_docs"].fn(spark, SF)
+    df = workload.QUERIES["find_ls_stat_docs"].fn(spark, SF)
     plan = plans.executed_plan(df)
     assert "TakeOrderedAndProject(limit=50" in plan
     assert plans.shuffle_count(df) == 0
 
 
 def test_string_hash_single_codegen_projection(spark):
-    """The scalar-function surface stays one whole-stage-codegen'd
-    projection over one scan: no shuffle, no Python."""
-    df = workload.QUERIES["string_hash_docs"].fn(spark, SF)
+    """The scalar-function surface (the expression list doc_profile fuses
+    into its scan) stays one whole-stage-codegen'd projection over one
+    scan: no shuffle, no Python."""
+    from hadoop_source_spark.data import table
+
+    docs = table(spark, SF, "documents")
+    df = docs.select("doc_id", *workload._string_hash_cols())
     plan = plans.executed_plan(df)
     assert plans.shuffle_count(df) == 0
     # "*(1)" is the WholeStageCodegen stage marker in toString form
