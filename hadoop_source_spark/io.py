@@ -1,13 +1,17 @@
 """Format/IO layer — the reference's storage containers, Spark-first.
 
-SequenceFile (common/io/SequenceFile.java): Spark ships Hadoop's
-SequenceFile support natively — `write_sequence_file` /
-`read_sequence_file` below are REAL Hadoop-binary-compatible files
-(sc.sequenceFile / rdd.saveAsSequenceFile), not an emulation. A reader of
-the reference's files can hand them to this engine unchanged. Like the
+SequenceFile (common/io/SequenceFile.java): `write_sequence_file` /
+`read_sequence_file` below write and read REAL Hadoop-binary-compatible
+files, not an emulation: Hadoop's SequenceFile.Reader reads what they
+write, and they read what the reference writes. Scalar Writables (Text,
+BytesWritable, Int/Long/Double/BooleanWritable) with no compression or
+DefaultCodec RECORD/BLOCK compression go through seqfile.py's Arrow
+codec, a Spark Python data source that frames whole record batches in
+numpy and splits reads at sync markers. Map/array/array<array> values
+(boxed as nested MapWritables), other codecs and non-local file systems
+stay on the JVM path (rdd.saveAsHadoopFile / sc.sequenceFile). Like the
 reference's one createWriter keyed by value class, the one writer/reader
-pair picks the Writable boxing from the value column's type: scalars per
-WRITABLE_SPARK_TYPE, map/array/array<array> as (nested) MapWritables.
+pair picks the Writable boxing from the value column's type.
 
 MapFile (common/io/MapFile.java:66-69: sorted data + sparse index): the
 Spark-native equivalent is `write_kv_sorted` — key-range-partitioned,
@@ -27,29 +31,21 @@ getmerge (CopyCommands.Merge) → coalesce(1) write; concat (Concat.java:37)
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType
+
+from hadoop_source_spark import seqfile
 
 TEXT_CODECS = {"none", "gzip", "bzip2", "lz4", "deflate", "snappy"}
 PARQUET_CODECS = {"none", "snappy", "gzip", "zstd", "lz4", "uncompressed"}
 
 
-# Writable class ↔ Spark SQL type (SURVEY §1.2 type map). The PySpark
-# Writable converters handle the Java-side boxing both directions.
-# Caveat (Pyrolite boxing): a Python int becomes java Integer when it fits
-# in 32 bits, else Long — so IntWritable is for int-range keys and
-# LongWritable for values beyond 2^31 (mixed-magnitude long columns should
-# write as Text or split; the reader side decodes either class fine).
-WRITABLE_SPARK_TYPE = {
-    "org.apache.hadoop.io.Text": "string",
-    "org.apache.hadoop.io.IntWritable": "int",
-    "org.apache.hadoop.io.LongWritable": "long",
-    "org.apache.hadoop.io.DoubleWritable": "double",
-    "org.apache.hadoop.io.BooleanWritable": "boolean",
-    "org.apache.hadoop.io.BytesWritable": "binary",
-}
+# Writable class ↔ Spark SQL type (SURVEY §1.2 type map).
+WRITABLE_SPARK_TYPE = {cls: t for cls, (t, _, _) in seqfile.WRITABLES.items()}
 
 _SEQ_OUTPUT_FORMAT = "org.apache.hadoop.mapred.SequenceFileOutputFormat"
 
@@ -90,6 +86,28 @@ def _writable_unboxing(dtype: DataType):
     return None
 
 
+def _local_path(path: str) -> str | None:
+    """`path` on the local file system, or None for another scheme."""
+    parsed = urlparse(path)
+    if parsed.scheme == "file":
+        return parsed.path
+    return path if not parsed.scheme else None
+
+
+def _sequence_file_source(spark: SparkSession) -> str:
+    """The name of the Arrow SequenceFile source, registered once per
+    session. The JVM looks a format name up through the calling thread's
+    active session, which a new thread (an `_overlap` thunk, a thread
+    pool) does not have, so it is set here first."""
+    jss = spark._jsparkSession
+    spark._jvm.SparkSession.setActiveSession(jss)
+    if not jss.sessionState().dataSourceManager().dataSourceExists(seqfile.NAME):
+        # Python workers need not import this package: the source goes by value
+        cloudpickle.register_pickle_by_value(seqfile)
+        spark.dataSource.register(seqfile.SequenceFileSource)
+    return seqfile.NAME
+
+
 def write_sequence_file(
     df: DataFrame,
     path: str,
@@ -98,7 +116,7 @@ def write_sequence_file(
     key_class: str = "org.apache.hadoop.io.Text",
     value_class: str = "org.apache.hadoop.io.Text",
     compression: str = "none",
-    codec: str = "org.apache.hadoop.io.compress.DefaultCodec",
+    codec: str = seqfile.DEFAULT_CODEC,
 ) -> None:
     """Write a 2-column DataFrame as a REAL Hadoop SequenceFile —
     binary-compatible with the reference's readers.
@@ -110,45 +128,56 @@ def write_sequence_file(
     compression codec, and key/value Writable classes come from the
     §1.2 type map (Text, Int/Long/Double/Boolean/BytesWritable). A map,
     array or array<array> value column is written as MapWritable values
-    whatever `value_class` says (see _writable_boxing)."""
+    whatever `value_class` says (see _writable_boxing). Like
+    saveAsHadoopFile, it refuses an existing `path`, writes one part file
+    per partition and then `_SUCCESS`; a null key or value is refused."""
+    if compression not in ("none", "record", "block"):
+        raise ValueError(f"compression must be none|record|block, got {compression}")
     kt = WRITABLE_SPARK_TYPE[key_class]
     box = _writable_boxing(df.schema[value_col].dataType)
+    local = _local_path(path)
+    if box is None and local is not None and (compression == "none" or codec == seqfile.DEFAULT_CODEC):
+        pairs = df.select(F.col(key_col).cast(kt), F.col(value_col).cast(WRITABLE_SPARK_TYPE[value_class]))
+        (pairs.write.format(_sequence_file_source(df.sparkSession)).mode("append")
+         .option("compression", compression).save(local))
+        return
+    # The JVM path remains for what the Arrow codec does not cover: it boxes
+    # composite values as MapWritables, compresses with any codec class and
+    # writes to any Hadoop file system.
     if box is None:
-        vt = WRITABLE_SPARK_TYPE[value_class]
         rdd = df.select(
-            F.col(key_col).cast(kt), F.col(value_col).cast(vt)
+            F.col(key_col).cast(kt), F.col(value_col).cast(WRITABLE_SPARK_TYPE[value_class])
         ).rdd.map(tuple)
     else:
         value_class = "org.apache.hadoop.io.MapWritable"
         rdd = df.select(
             F.col(key_col).cast(kt).alias("k"), F.col(value_col).alias("v")
         ).rdd.map(lambda r: (r.k, box(r.v)))
-    if compression == "none":
-        rdd.saveAsHadoopFile(path, _SEQ_OUTPUT_FORMAT, key_class, value_class)
-        return
-    if compression not in ("record", "block"):
-        raise ValueError(f"compression must be none|record|block, got {compression}")
-    conf = {
+    conf = {} if compression == "none" else {
         "mapreduce.output.fileoutputformat.compress": "true",
         "mapreduce.output.fileoutputformat.compress.type": compression.upper(),
         "mapreduce.output.fileoutputformat.compress.codec": codec,
     }
-    rdd.saveAsHadoopFile(
-        path, _SEQ_OUTPUT_FORMAT, key_class, value_class,
-        conf=conf, compressionCodecClass=codec,
-    )
+    rdd.saveAsHadoopFile(path, _SEQ_OUTPUT_FORMAT, key_class, value_class, conf=conf)
 
 
 def read_sequence_file(
     spark: SparkSession, path: str, schema: str = "key string, value string"
 ) -> DataFrame:
-    """Read a Hadoop SequenceFile into a (key, value) DataFrame. The
-    header's key/value classes + codec drive decoding on the Java side
-    (SequenceFile.Reader.init) — pass `schema` matching the Writable
-    types (see WRITABLE_SPARK_TYPE); an array or array<array> value
-    column is rebuilt from its index-keyed MapWritable."""
+    """Read a Hadoop SequenceFile into a (key, value) DataFrame. Pass
+    `schema` matching the Writable types (see WRITABLE_SPARK_TYPE); an
+    array or array<array> value column is rebuilt from its index-keyed
+    MapWritable. Files of scalar Writables with no codec or DefaultCodec
+    are decoded by the Arrow source; anything else — composite values,
+    other codecs, other Writable classes or file systems, or a `schema`
+    that differs from the header's classes — by the JVM's
+    SequenceFile.Reader (sc.sequenceFile)."""
+    fields = DataType.fromDDL(schema).fields
+    local = _local_path(path)
+    if local is not None and seqfile.decodes(local, [f.dataType for f in fields]):
+        return spark.read.format(_sequence_file_source(spark)).schema(schema).load(local)
     rdd = spark.sparkContext.sequenceFile(path)
-    unbox = _writable_unboxing(DataType.fromDDL(schema).fields[1].dataType)
+    unbox = _writable_unboxing(fields[1].dataType)
     if unbox is not None:
         rdd = rdd.map(lambda kv: (kv[0], unbox(kv[1])))
     return spark.createDataFrame(rdd, schema)

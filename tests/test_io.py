@@ -4,10 +4,12 @@
 from __future__ import annotations
 
 import glob
+import os
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from hadoop_source_spark import io as hio
 
@@ -363,6 +365,236 @@ def test_sequence_file_composite_round_trip(spark, tmp_path, schema, rows):
     assert sorted(map(tuple, back.collect())) == sorted(rows)
     with open(glob.glob(f"{path}/part-*")[0], "rb") as f:
         assert b"org.apache.hadoop.io.MapWritable" in f.read(256)
+
+
+
+# --- SequenceFile byte compatibility with Hadoop (Arrow codec, seqfile.py) --
+
+_SEQ_FORMAT = "org.apache.hadoop.mapred.SequenceFileOutputFormat"
+_W = "org.apache.hadoop.io."
+# vint edges: empty, 127 and 128 bytes (one- vs two-byte length), over
+# 32 KB (three-byte length), multi-byte UTF-8
+_TEXT_EDGES = ["", "a" * 127, "b" * 128, "c" * 40_000, "héllo wörld ✓ 日本語", "\x00tab\tnl\n"]
+_BYTES_EDGES = [b"", bytes(range(256)), b"\x00" * 128, b"\xff" * 33_000]
+_SEQ_CASES = {
+    "text-bytes": (_W + "Text", _W + "BytesWritable", "key string, value binary",
+                   [(_TEXT_EDGES[i % 6] + str(i), _BYTES_EDGES[i % 4] + bytes([i % 256]))
+                    for i in range(300)]),
+    # LongWritable values past the int range: the JVM writer boxes smaller
+    # Python ints as IntWritable
+    "int-long": (_W + "IntWritable", _W + "LongWritable", "key int, value bigint",
+                 [(v, w) for v, w in zip([-2**31, -1, 0, 127, 128, 2**31 - 1] * 50,
+                                         [2**31, -2**31 - 1, 2**62, -2**63, 2**63 - 1, 2**40] * 50)]),
+    "double-boolean": (_W + "DoubleWritable", _W + "BooleanWritable", "key double, value boolean",
+                       [(x * 1.5, i % 3 == 0)
+                        for i, x in enumerate([0.0, -0.0, 1e300, -7.25, float("inf")] * 60)]),
+}
+
+
+def _bytes_norm(rows):
+    return sorted(tuple(bytes(x) if isinstance(x, (bytes, bytearray)) else x for x in r)
+                  for r in rows)
+
+
+def _hadoop_conf(compression):
+    return {} if compression == "none" else {
+        "mapreduce.output.fileoutputformat.compress": "true",
+        "mapreduce.output.fileoutputformat.compress.type": compression.upper(),
+        "mapreduce.output.fileoutputformat.compress.codec":
+            "org.apache.hadoop.io.compress.DefaultCodec",
+    }
+
+
+def _arrow_decoded(df):
+    return "hss_sequencefile" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _header(path):
+    from hadoop_source_spark import seqfile
+
+    with open(path, "rb") as f:
+        return seqfile.read_header(f)
+
+
+@pytest.mark.parametrize("compression", ["none", "record", "block"])
+@pytest.mark.parametrize("case", list(_SEQ_CASES))
+def test_sequence_file_matches_hadoop(spark, tmp_path, case, compression):
+    """Both directions against Hadoop's own SequenceFile code, per Writable
+    class and CompressionType: Hadoop's reader (sc.sequenceFile) reads what
+    write_sequence_file writes, read_sequence_file decodes what
+    saveAsHadoopFile writes through the Arrow source, and the two writers'
+    files are the same bytes but for the random sync hash."""
+    key_class, value_class, ddl, rows = _SEQ_CASES[case]
+    ours, theirs = str(tmp_path / "ours"), str(tmp_path / "theirs")
+    hio.write_sequence_file(spark.createDataFrame(rows, ddl).coalesce(1), ours,
+                            key_class=key_class, value_class=value_class,
+                            compression=compression)
+    spark.sparkContext.parallelize(rows, 1).saveAsHadoopFile(
+        theirs, _SEQ_FORMAT, key_class, value_class, conf=_hadoop_conf(compression))
+
+    assert _bytes_norm(spark.sparkContext.sequenceFile(ours).collect()) == _bytes_norm(rows)
+    back = hio.read_sequence_file(spark, theirs, ddl)
+    assert _arrow_decoded(back)
+    assert _bytes_norm(back.collect()) == _bytes_norm(rows)
+
+    a, b = f"{ours}/part-00000", f"{theirs}/part-00000"
+    ha, hb = _header(a), _header(b)
+    assert (ha.compression, ha.key_class, ha.value_class) == (compression, key_class, value_class)
+    with open(a, "rb") as fa, open(b, "rb") as fb:
+        assert fa.read().replace(ha.sync, b"S" * 16) == fb.read().replace(hb.sync, b"S" * 16)
+
+
+@pytest.mark.parametrize("compression", ["none", "block"])
+def test_sequence_file_splits_read_mid_block(spark, tmp_path, compression):
+    """A part file over 1 MB holds several blocks (BLOCK) or sync markers
+    (NONE) and is read as several sync-aligned splits, the first of which
+    ends inside a block: every record is read exactly once, by our reader
+    and by Hadoop's."""
+    import numpy as np
+
+    from hadoop_source_spark import seqfile
+
+    rng = np.random.default_rng(7)
+    rows = [(f"{i:08d}", rng.bytes(32).hex()) for i in range(40_000)]
+    path = str(tmp_path / "big")
+    hio.write_sequence_file(spark.createDataFrame(rows, "key string, value string").coalesce(1),
+                            path, compression=compression)
+    part = f"{path}/part-00000"
+    size = os.path.getsize(part)
+    assert size > 1 << 20
+    h = _header(part)
+    with open(part, "rb") as f:
+        body = f.read()
+    syncs = [i - 4 for i in range(len(body)) if body.startswith(h.sync, i)][1:]
+    assert len(syncs) >= 3  # the header's own copy is dropped above
+
+    reader = seqfile._Reader(path, DataType.fromDDL("key string, value string"))
+    parts = reader.partitions()
+    assert len(parts) >= 2
+    assert parts[0].value[2] not in syncs and parts[1].value[1] not in syncs  # mid-block cut
+    per_split = [[r for b in reader.read(p) for r in zip(*(c.to_pylist() for c in b.columns))]
+                 for p in parts]
+    assert all(per_split)
+    assert sorted(r for s in per_split for r in s) == rows
+
+    back = hio.read_sequence_file(spark, path)
+    assert back.rdd.getNumPartitions() == len(parts)
+    assert sorted(map(tuple, back.collect())) == rows
+    assert sorted(spark.sparkContext.sequenceFile(path).collect()) == rows
+
+
+@pytest.mark.parametrize("compression", ["none", "record", "block"])
+def test_sequence_file_empty_input(spark, tmp_path, compression):
+    """No rows: one header-only part file per partition, as
+    saveAsHadoopFile writes, and both readers read nothing."""
+    path = str(tmp_path / "empty")
+    empty = spark.createDataFrame(spark.sparkContext.parallelize([], 2), "key string, value string")
+    hio.write_sequence_file(empty, path, compression=compression)
+    assert sorted(os.listdir(path)) == ["_SUCCESS", "part-00000", "part-00001"]
+    for p in ("part-00000", "part-00001"):
+        assert os.path.getsize(f"{path}/{p}") == _header(f"{path}/{p}").end
+    assert hio.read_sequence_file(spark, path).count() == 0
+    assert spark.sparkContext.sequenceFile(path).count() == 0
+
+
+def test_sequence_file_output_layout(spark, tmp_path, kv_df):
+    """saveAsHadoopFile's output contract: one part file per partition
+    (committed from _temporary/), _SUCCESS, and an existing target refused."""
+    path = str(tmp_path / "seq")
+    hio.write_sequence_file(kv_df.repartition(3), path, compression="block")
+    assert sorted(os.listdir(path)) == ["_SUCCESS", "part-00000", "part-00001", "part-00002"]
+    with pytest.raises(Exception, match="already exists"):
+        hio.write_sequence_file(kv_df, path)
+    assert hio.read_sequence_file(spark, path).count() == 1000
+
+
+@pytest.mark.parametrize("column", ["key", "value"])
+def test_sequence_file_refuses_nulls(spark, tmp_path, column):
+    """A Writable has no null. The pickled-row writer this replaced failed
+    the task inside SequenceFile.Writer.append with "wrong value class:
+    org.apache.hadoop.io.NullWritable is not class org.apache.hadoop.io.Text";
+    the Arrow writer refuses with the column's name, and the failed write
+    leaves no part file behind."""
+    rows = [("a", "x"), (None, "y")] if column == "key" else [("a", "x"), ("b", None)]
+    path = str(tmp_path / "seq")
+    with pytest.raises(Exception, match=f"column '{column}' holds nulls"):
+        hio.write_sequence_file(spark.createDataFrame(rows, "key string, value string"), path)
+    assert os.listdir(path) == []
+
+
+def test_sequence_file_long_keys_of_mixed_magnitude(spark, tmp_path):
+    """A long column holding both 1 and 2^33 writes as LongWritable. The
+    pickled-row writer failed it: Pyrolite boxed 1 as an Integer, so
+    SequenceFile.Writer refused an IntWritable key."""
+    path = str(tmp_path / "seq")
+    df = spark.createDataFrame([(1, "a"), (2**33, "b")], "key long, value string")
+    hio.write_sequence_file(df, path, key_class=_W + "LongWritable")
+    assert _header(f"{path}/part-00000").key_class == _W + "LongWritable"
+    assert sorted(spark.sparkContext.sequenceFile(path).collect()) == [(1, "a"), (2**33, "b")]
+
+
+def test_sequence_file_other_codec_stays_on_jvm(spark, tmp_path, kv_df):
+    """A codec other than DefaultCodec goes through saveAsHadoopFile and
+    sc.sequenceFile, and keeps the CompressionType asked for."""
+    path = str(tmp_path / "seq")
+    codec = "org.apache.hadoop.io.compress.BZip2Codec"
+    hio.write_sequence_file(kv_df.coalesce(1), path, compression="record", codec=codec)
+    h = _header(f"{path}/part-00000")
+    assert (h.compression, h.codec) == ("record", codec)
+    back = hio.read_sequence_file(spark, path)
+    assert not _arrow_decoded(back)
+    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, kv_df.collect()))
+
+
+def test_sequence_file_from_helper_threads(spark, tmp_path, kv_df):
+    """A new thread has no active JVM session, through which Spark looks a
+    format name up: writes and reads from a thread pool and from an
+    `_overlap` thunk still find the source."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from hadoop_source_spark.workload import _overlap
+
+    def round_trip(name):
+        path = str(tmp_path / name)
+        hio.write_sequence_file(kv_df, path, compression="block")
+        return hio.read_sequence_file(spark, path).count()
+
+    with ThreadPoolExecutor(1) as pool:
+        assert pool.submit(round_trip, "pool").result(timeout=600) == 1000
+    assert _overlap(lambda: round_trip("overlap")) == [1000]
+
+
+def test_vlong_matches_writable_utils():
+    """The numpy vint codec against a per-value transcription of
+    WritableUtils.writeVLong, over every width and sign."""
+    import numpy as np
+
+    from hadoop_source_spark import seqfile
+
+    def write_vlong(i):
+        if -112 <= i <= 127:
+            return bytes([i & 0xFF])
+        n = -112
+        if i < 0:
+            i ^= -1
+            n = -120
+        t = i
+        while t:
+            t >>= 8
+            n -= 1
+        width = -(n + 120) if n < -120 else -(n + 112)
+        return bytes([n & 0xFF]) + i.to_bytes(width, "big")
+
+    rng = np.random.default_rng(3)
+    values = [0, 1, -1, 127, 128, -112, -113, 255, 256, 2**15, 2**31 - 1, -2**31,
+              2**63 - 1, -2**63] + [int(v) for v in rng.integers(-2**62, 2**62, 2000)]
+    values += [int(v) >> int(s) for v, s in zip(rng.integers(-2**62, 2**62, 2000),
+                                                 rng.integers(0, 62, 2000))]
+    buf, sizes = seqfile.vlong_encode(values)
+    assert buf.tobytes() == b"".join(write_vlong(v) for v in values)
+    assert list(seqfile.vlong_run(buf, len(values))) == values
+    decoded, dsizes = seqfile.vlong_decode(buf, np.cumsum(sizes) - sizes)
+    assert list(decoded) == values and (dsizes == sizes).all()
 
 
 AVRO_SCHEMA = {
